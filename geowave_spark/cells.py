@@ -176,9 +176,10 @@ def _grid_range(
     one id at tier t (TieredSFCIndexStrategyTest.java:140-168).
 
     ``closed=True`` keeps the boundary cell open (plain floor — the same
-    convention as the Column-math covers in sqlcells/_extent_cells): a
-    QUERY-side cover must meet partners that only touch the extent's upper
-    edge, which live in the next cell.
+    convention as the Column-math covers in sqlcells and
+    spatial_join._extent_multitier_keys): a QUERY-side cover must meet
+    partners that only touch the extent's upper edge, which live in the
+    next cell.
     """
     r = 1 << tier
     g0 = min(max(int(np.floor(nmin * r)), 0), r - 1)
@@ -228,21 +229,26 @@ def split_bbox_antimeridian(
 def _split_for_cover(
     bbox: tuple[float, float, float, float], closed: bool, bounds=None
 ) -> list[tuple[float, float, float, float]]:
-    """Antimeridian split, plus the +180 seam column for CLOSED covers.
+    """Antimeridian split, plus the +180 seam columns for CLOSED covers.
 
     Stored points at lon exactly +180 wrap into grid column 0
     (``norm_lon``), but a cover whose upper bound is 180 maps that bound
     to the LAST column (``norm_lon_upper``) — so a boundary-closed
     (query-side) cover ending at the antimeridian must also include the
     wrapped column, or rows the exact refine accepts never become
-    candidates.  Open (insert-rule) covers keep the reference's exact-fit
-    convention unchanged.
+    candidates.  Conversely a closed cover STARTING at exactly +180 is
+    canonicalized to -180 (column 0), yet partners ending at x = 180 are
+    keyed in the last column, so it also covers that column.  Open
+    (insert-rule) covers keep the reference's exact-fit convention
+    unchanged.
 
     Custom ``bounds`` have no wrap and no seam — the bbox passes through
     whole (clamped normalization handles out-of-frame edges)."""
     if bounds is not None:
         return [bbox]
     parts = split_bbox_antimeridian(bbox)
+    if closed and bbox[0] == 180.0:
+        parts.append((float(np.nextafter(180.0, 0.0)), bbox[1], 180.0, bbox[3]))
     if closed and not any(p[0] == -180.0 for p in parts):
         # skip when a part already starts at -180 (it covers column 0) —
         # double-counting would break count==cover-size and push

@@ -1,18 +1,38 @@
-"""Tiered spatial join — the engine's flagship operator.
+"""Tiered spatial joins — the engine's flagship operators.
 
 Spark-first re-expression of the reference's TieredSpatialJoin
 (analytics/spark/.../spatial/TieredSpatialJoin.java:75-377).  The reference
 runs a driver-side loop over tiers with per-tier cogroups and RDD unions;
-we collapse the whole thing into ONE Catalyst plan:
+every join here is ONE Catalyst plan.
 
-    polygons --driver-side numpy cover (broadcast path) OR one Arrow
-              bbox pass + Column span tiering (shuffle path)--> packed keys
+Point joins (`tiered_spatial_join`):
+
+    polygons --driver-side numpy cover (broadcast path) OR the pipeline's
+              Column-side own-tier cells (shuffle path)--> packed keys
     points   --Column bit math--> packed key per polygon tier  (JVM side)
              --explode over the tier list (typically 1-5 tiers)
     equi-join on the single long key   (broadcast if small, else forced
                                         sort-merge with AQE skew + salting)
     exact predicate refine (Arrow pandas UDF, or pure SQL for boxes)
-    dropDuplicates per (point, polygon)      (DedupeFilter semantics)
+
+Extent and geometry joins (`tiered_extent_join`(`_shuffle`),
+`geometry_join`(`_shuffle`)) are four short calls into ONE pipeline:
+
+    left keys    envelope (bbox columns or one Arrow st_bbox pass) → span
+                 tier → cells at its own tier and at every coarser partner
+                 tier (`_extent_multitier_keys`, pure Column math)
+    right cells  broadcast: one driver-side cover (`_cover_rows`: own-tier
+                 cover + truncation to every coarser tier);
+                 shuffled: the same Column-side keys as the left
+    seam split   shuffled envelopes reaching past the antimeridian split
+                 into their in-range images (`_seam_split`); the tier set
+                 and "any split" come from one aggregate (`_discover`)
+    candidates   packed-key equi-join → meet-tier filter → JVM bbox
+                 prefilter → necessary-envelope filter → PBSM
+                 reference-point witness (`_candidates`)
+    refine       bbox-only, box×box interval algebra, or pairwise WKT
+
+The cover step is where per-cell replication control would plug in.
 
 Semantics preserved (verified against the brute-force oracle, the same test
 design as GeoWaveSparkSpatialJoinIT.java:227-254):
@@ -23,21 +43,23 @@ design as GeoWaveSparkSpatialJoinIT.java:227-254):
   (GeomWithinDistance.java:43-45);
 * negative predicate → anti join (TieredSpatialJoin.java:357-363);
 * output joined back to the base tables as semi/anti
-  (TieredSpatialJoin.java:364-373).
+  (TieredSpatialJoin.java:364-373);
+* each pair is emitted once: by construction (points meet a polygon in one
+  cell), by the PBSM witness, or by a dedup on the small refined output.
 
 Scale design (100 TB point side):
 * point-side key generation is pure Column arithmetic — whole-stage codegen,
   zero Python;
 * only columns needed are read (Parquet/Iceberg column pruning: image_id +
   phash — the multi-KB `bytes` column is never scanned);
-* the polygon side (cells exploded) is broadcast when under the broadcast
-  threshold — no shuffle of the point side at all;
+* the polygon side is broadcast when under the broadcast threshold — no
+  shuffle of the big side at all;
 * when the polygon side is too big to broadcast, both sides shuffle on the
   packed key; AQE skew-join splits hot cells, and an optional salt factor
   replicates polygon cells to break extreme skew (world polygons);
-* tier list is discovered from the polygon side only (tiny aggregate),
-  mirroring the reference's tier-discovery pre-pass
-  (TieredSpatialJoin.java:173-207) — the point side is never scanned for it.
+* tier lists come from tiny aggregates, mirroring the reference's
+  tier-discovery pre-pass (TieredSpatialJoin.java:173-207) — a point
+  join's point side is never scanned for it.
 """
 
 from __future__ import annotations
@@ -367,86 +389,24 @@ def _shuffle_join(
     pts, polygons, predicate, radius, buffer, lon_col, lat_col,
     point_id, polygon_id, wkt_col, max_cells, loose, salt, bounds=None,
 ) -> DataFrame:
-    """Large polygon side: one Arrow bbox UDF + pure-Column span-based
-    tiering (<= 4 covering cells per polygon, the reference's
-    estimated-count <= 2^d insert rule) + shuffle equi-join on the packed
-    key, with optional polygon-replication salting on top of AQE skew-join
-    splitting.
+    """Large polygon side: the pipeline's Column-side right cells (one
+    Arrow bbox pass, the seam split, a span-based own-tier cover of <= 4
+    cells per polygon — the reference's estimated-count <= 2^d insert
+    rule) + shuffle equi-join on the packed key, with optional
+    polygon-replication salting on top of AQE skew-join splitting.
 
     Scale design: the ONLY Python on the polygon side is the per-row WKT →
     bbox extraction (st_bbox); tier assignment, cell explosion and key
     packing are whole-stage-codegen Column math, so a 10^8-polygon side
     runs at scan speed.  Points sit at the finest tier, so a pair always
     meets at the polygon's tier — each polygon emits its own-tier cells
-    only, and each point emits one key per DISTINCT polygon tier (<= 32,
-    discovered via a tiny aggregate, TieredSpatialJoin.java:173-207).
+    only, and each point emits one key per DISTINCT polygon tier (<= 32).
     """
-    lb = polygons.select(polygon_id, wkt_col).withColumn(
-        "_bb", geo_udfs.st_bbox(F.col(wkt_col))
-    ).select(
-        polygon_id,
-        F.col(wkt_col),
-        (F.col("_bb.x0") - buffer).alias("_px0"),
-        (F.col("_bb.y0") - buffer).alias("_py0"),
-        (F.col("_bb.x1") + buffer).alias("_px1"),
-        (F.col("_bb.y1") + buffer).alias("_py1"),
-    ).localCheckpoint()  # ONE bbox-UDF pass feeding the wrap-split branches
-    # antimeridian: unwrapped bboxes (x1 > 180, or x0 < -180 after
-    # buffering) split into two in-range sub-extents BEFORE tiering
-    # (LongitudeDefinition wrap semantics); the exact refine already tests
-    # the +360-shifted copy, so recall and exactness both hold
-    keep = ["_px0", "_py0", "_px1", "_py1"]
-    others = [c for c in lb.columns if c not in keep]
-    if bounds is not None:
-        # custom bounds: clamped normalization, no antimeridian seam — the
-        # whole side passes through unsplit (the wrap branches below see an
-        # empty frame and short-circuit)
-        norm, lb = lb, lb.filter(F.lit(False))
-    else:
-        norm = lb.filter((F.col("_px1") <= 180.0) & (F.col("_px0") >= -180.0))
-    # full-wrap rule first (cells.split_bbox_antimeridian semantics): a
-    # bbox overflowing BOTH edges (world-spanning polygon + buffer) must
-    # become one world box — it would otherwise land in BOTH the hi and
-    # lo branches with an out-of-range bound surviving in two of the four
-    # images, collapsing its cover to a seam sliver and dropping pairs
-    both = lb.filter((F.col("_px1") > 180.0) & (F.col("_px0") < -180.0))
-    hi = lb.filter((F.col("_px1") > 180.0) & (F.col("_px0") >= -180.0))
-    lo = lb.filter((F.col("_px0") < -180.0) & (F.col("_px1") <= 180.0))
-    wrap_split = not (hi.isEmpty() and lo.isEmpty() and both.isEmpty())
-    if not wrap_split:
-        lb2 = norm
-    else:
-        lb2 = (
-            norm
-            .unionByName(hi.select(*others, "_px0", "_py0", F.lit(180.0).alias("_px1"), "_py1")
-                         .select(*lb.columns))
-            .unionByName(hi.select(*others, F.lit(-180.0).alias("_px0"), "_py0",
-                                   (F.col("_px1") - 360.0).alias("_px1"), "_py1")
-                         .select(*lb.columns))
-            .unionByName(lo.select(*others, F.lit(-180.0).alias("_px0"), "_py0", "_px1", "_py1")
-                         .select(*lb.columns))
-            .unionByName(lo.select(*others, (F.col("_px0") + 360.0).alias("_px0"), "_py0",
-                                   F.lit(180.0).alias("_px1"), "_py1")
-                         .select(*lb.columns))
-            .unionByName(both.select(*others, F.lit(-180.0).alias("_px0"), "_py0",
-                                     F.lit(180.0).alias("_px1"), "_py1")
-                         .select(*lb.columns))
-        )
-    pc = _extent_cells(
-        lb2, polygon_id, "_px0", "_py0", "_px1", "_py1", extra_cols=(wkt_col,),
-        bounds=bounds,
-    )
-    offs = F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
-    poly_cells = pc.withColumn(
-        "key", (F.element_at(offs, F.col("_te") + 1) + F.col("_cell")).cast("long")
-    ).localCheckpoint()  # materialized once; ContextCleaner-reclaimed
-
-    # tier discovery: distinct TIERS (<= 32 rows after map-side partial
-    # agg), never the distinct keys
-    tiers = sorted(r[0] for r in poly_cells.select("_te").distinct().collect())
+    rb = _seam_split(_bbox_frame(polygons, polygon_id, "r", wkt_col, pad=buffer), "r", bounds)
+    rc, tiers, any_split = _discover(rb, "r", bounds)
     if not tiers:
         return pts.select(point_id).limit(0).crossJoin(polygons.select(polygon_id).limit(0))
-    poly_cells = poly_cells.drop("_te", "_cell", "_px0", "_py0", "_px1", "_py1")
+    poly_cells = _extent_multitier_keys(rc, "r", [], bounds).select("key", "_rid", "_rwkt")
 
     pt_keys = pts.select(point_id, lon_col, lat_col, "_cell31").withColumn(
         "key", F.explode(_point_keys_expr(tiers))
@@ -469,12 +429,328 @@ def _shuffle_join(
         joined = pt_keys.join(poly_cells, "key")
 
     if not loose:
-        joined = _refine_general(joined, predicate, radius, lon_col, lat_col, wkt_col, bounds)
-    out = joined.select(point_id, polygon_id)
+        joined = _refine_general(joined, predicate, radius, lon_col, lat_col, "_rwkt", bounds)
+    out = joined.select(point_id, F.col("_rid").alias(polygon_id))
     # points meet each polygon at most once (one cell per tier) — dedupe is
-    # only needed when a wrapped polygon was split into two sub-extents
-    # whose covers can share a coarse cell
-    return out.dropDuplicates([point_id, polygon_id]) if wrap_split else out
+    # only needed when a seam-split polygon's two sub-extents can share a
+    # coarse cell
+    return out.dropDuplicates([point_id, polygon_id]) if any_split else out
+
+
+# ---------------------------------------------------------------------------
+# The extent / geometry join pipeline: left keys → right cells → candidates
+# → refine.  Column names: ``_{p}id``, ``_{p}wkt``, ``_{p}x0.._{p}y1``,
+# ``_{p}te`` (own tier) and ``_{p}seam`` per side p in {"l", "r"}.
+# ---------------------------------------------------------------------------
+
+def _bbox_frame(
+    df: DataFrame, id_col: str, p: str, wkt_col: str | None = None,
+    bbox_cols: tuple[str, str, str, str] | None = None, pad: float = 0.0,
+) -> DataFrame:
+    """(_{p}id, [_{p}wkt], _{p}x0.._{p}y1): the envelope from ``bbox_cols``
+    when the caller has it, else from one Arrow st_bbox pass over
+    ``wkt_col``; padded by ``pad`` (dwithin)."""
+    if bbox_cols is None:
+        df = df.withColumn("_bb", geo_udfs.st_bbox(F.col(wkt_col)))
+        bbox_cols = ("_bb.x0", "_bb.y0", "_bb.x1", "_bb.y1")
+    x0, y0, x1, y1 = (F.col(c) for c in bbox_cols)
+    if pad:
+        x0, y0, x1, y1 = x0 - pad, y0 - pad, x1 + pad, y1 + pad
+    wkt = [F.col(wkt_col).alias(f"_{p}wkt")] if wkt_col else []
+    return df.select(
+        F.col(id_col).alias(f"_{p}id"), *wkt,
+        x0.alias(f"_{p}x0"), y0.alias(f"_{p}y0"), x1.alias(f"_{p}x1"), y1.alias(f"_{p}y1"),
+    )
+
+
+def _seam_split(b: DataFrame, p: str, bounds=None) -> DataFrame:
+    """The Column twin of cells.split_bbox_antimeridian: an envelope whose
+    lower bound lies outside [-180, 180] is first shifted by whole turns;
+    one that then crosses the seam (x1 > 180) becomes its two in-range
+    images [x0, 180] and [-180, x1 - 360]; a full wrap (span >= 360)
+    becomes the world row.  A lower bound of exactly +180 is NOT shifted,
+    so [180, x1] keeps its [180, 180] sliver in the last grid column,
+    where partners ending at x = 180 are keyed.  ``_{p}seam`` flags every
+    envelope reaching past the seam: its rows are not the geometry's plain
+    envelope, so the necessary-envelope filter passes them to the exact
+    refine (which also tests the -360-shifted image).  Custom ``bounds``
+    have no seam.  Null envelopes emit no row."""
+    x0, x1 = F.col(f"_{p}x0"), F.col(f"_{p}x1")
+    b = b.withColumn(f"_{p}seam", F.lit(False) if bounds is not None else (x0 < -180.0) | (x1 > 180.0))
+    if bounds is not None:
+        return b
+    k = F.when(x0.between(-180.0, 180.0), F.lit(0.0)).otherwise(F.floor((x0 + 180.0) / 360.0) * 360.0)
+    full = x1 - x0 >= 360.0
+    parts = F.when(full | (x1 - k <= 180.0), F.array(F.lit(0))).when(
+        x1 - k > 180.0, F.array(F.lit(0), F.lit(1))
+    )
+    hi = F.col("_part") == 1
+    return b.withColumn("_part", F.explode(parts)).withColumns({
+        f"_{p}x0": F.when(full | hi, F.lit(-180.0)).otherwise(x0 - k),
+        f"_{p}x1": F.when(full, F.lit(180.0)).when(hi, x1 - k - 360.0)
+        .otherwise(F.least(x1 - k, F.lit(180.0))),
+    }).drop("_part")
+
+
+def _extent_tier_expr(p: str, bounds=None) -> Column:
+    """Span-based adaptive tier of an envelope row: the finest grid whose
+    cell >= the extent's normalized span, so the own-tier cover is always
+    <= 2x2 cells (the estimated-count insert rule of
+    TieredSFCIndexStrategy.getEstimatedIdCount)."""
+    wx = 360.0 if bounds is None else float(bounds[2] - bounds[0])
+    wy = 180.0 if bounds is None else float(bounds[3] - bounds[1])
+    sx = (F.col(f"_{p}x1") - F.col(f"_{p}x0")) / F.lit(wx)
+    sy = (F.col(f"_{p}y1") - F.col(f"_{p}y0")) / F.lit(wy)
+    span = F.greatest(sx, sy, F.lit(0.0))
+    return (
+        F.when(span <= 0.0, F.lit(cells.MAX_TIER))
+        .otherwise(
+            F.least(F.greatest(F.floor(-F.log2(span)).cast("int"), F.lit(0)), F.lit(cells.MAX_TIER))
+        )
+    )
+
+
+def _discover(b: DataFrame, p: str, bounds=None) -> tuple[DataFrame, list[int], bool]:
+    """Big side: tag the own tier, materialize once (localCheckpoint,
+    MEMORY_AND_DISK, ContextCleaner-reclaimed) and read the tier set AND
+    whether any envelope reached past the seam from ONE tiny aggregate —
+    the reference's tier-discovery pre-pass (TieredSpatialJoin.java:
+    173-207); the distinct keys are never collected."""
+    b = b.withColumn(f"_{p}te", _extent_tier_expr(p, bounds)).localCheckpoint()
+    seam = F.max(f"_{p}seam") if f"_{p}seam" in b.columns else F.lit(False)
+    tiers, any_seam = b.agg(F.collect_set(f"_{p}te"), seam).first()
+    return b, sorted(tiers), bool(any_seam)
+
+
+def _grid(norm: Column, lo: Column | None = None) -> Column:
+    """Grid coordinate of a normalized value at the row's emission tier
+    (``_rd`` = 2^_kt cells per axis, ``_rm`` = 2^_kt - 1): plain floor,
+    clamped to [lo (default 0), _rm].  The cover and the PBSM witness must
+    share this rule, or the witness corner could miss every cover cell."""
+    lo = F.lit(0) if lo is None else lo
+    return F.least(F.greatest(F.floor(norm * F.col("_rd")), lo), F.col("_rm")).cast("long")
+
+
+def _extent_multitier_keys(
+    ex: DataFrame, p: str, partner_tiers: list[int], bounds=None,
+) -> DataFrame:
+    """Envelope rows (own tier in ``_{p}te``) → one row per (row, emission
+    tier ``_kt``, covering cell ``_cell``) plus the tier-packed ``key``.
+    The emission tiers are the row's OWN tier plus every strictly-coarser
+    tier present on the partner side, and the cell cover is computed
+    DIRECTLY at each emission tier.
+
+    Because the cover is re-derived per tier (not truncated from the own-
+    tier cover), (id, key) rows are unique by construction — two own-tier
+    cells can never collapse onto the same coarse key twice.  This is what
+    makes the reference-point emission exact with NO dropDuplicates.
+    """
+    te = F.col(f"_{p}te")
+    lower = [F.lit(int(t)) for t in sorted(set(partner_tiers))]
+    emit = F.array_append(F.filter(F.array(*lower), lambda t: t < te), te) if lower else F.array(te)
+    k = ex.withColumn("_kt", F.explode(emit))
+    k = k.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
+    k = k.withColumn("_rm", F.col("_rd").cast("long") - 1)
+    x0, y0, x1, y1 = (F.col(f"_{p}{c}") for c in ("x0", "y0", "x1", "y1"))
+    # norm_lon_upper on BOTH bounds: identical to norm_lon everywhere
+    # except exactly +180, where the wrap would put the lower bound in
+    # cell 0 while the upper clamps to r-1 — a degenerate seam box would
+    # otherwise cover the whole row (2^31 cells at the point tier)
+    k = k.withColumn("_gx0", _grid(sqlcells.norm_lon_upper(x0, bounds)))
+    k = k.withColumn("_gy0", _grid(sqlcells.norm_lat(y0, bounds)))
+    gx1 = _grid(sqlcells.norm_lon_upper(x1, bounds), F.col("_gx0"))
+    gy1 = _grid(sqlcells.norm_lat(y1, bounds), F.col("_gy0"))
+    offs = F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
+    return (
+        k.withColumn("_gx1", gx1).withColumn("_gy1", gy1)
+        .withColumn("_gx", F.explode(F.sequence(F.col("_gx0"), F.col("_gx1"))))
+        .withColumn("_gy", F.explode(F.sequence(F.col("_gy0"), F.col("_gy1"))))
+        .withColumn("_cell", sqlcells.interleave(F.col("_gx"), F.col("_gy")))
+        .withColumn("key", (F.element_at(offs, F.col("_kt") + 1) + F.col("_cell")).cast("long"))
+        .select(*ex.columns, "_kt", "_cell", "key")
+    )
+
+
+def _cover_rows(
+    rows: list[tuple], buffer: float = 0.0, trim: bool = False,
+    max_cells: int = cells.JOIN_MAX_CELLS,
+) -> tuple[list[tuple], list[int]]:
+    """Driver-side right cells of the broadcast joins: each geometry's
+    adaptive-tier cover (bbox buffered by ``buffer``; trimmed to cells the
+    true geometry touches when ``trim``) plus its truncation to every
+    coarser tier — the reprojectToTier direction in which the right side
+    is the coarser one; per-tier np.unique keeps (id, key) rows unique.
+
+    Covers are boundary-CLOSED: a right geometry whose upper edge lies
+    exactly on a cell line still meets left extents touching it from the
+    next cell (the Column-math left cover is closed too), and a dwithin
+    partner at EXACTLY distance `radius` past the buffered bbox's upper
+    edge lands in that next cell as well.
+
+    Returns (cell_rows, tiers); a cell row is (key, id, x0, y0, x1, y1,
+    own tier, is_box, seam) with the buffered bbox.  is_box: the geometry
+    IS its in-range bbox, so box×box candidates can refine JVM-side."""
+    import numpy as np
+    import pandas as pd
+
+    from .. import geom
+
+    covers = geo_udfs.cover_keys(
+        pd.Series([w for _, w in rows], dtype=object),
+        max_cells=max_cells, buffer=buffer, trim=trim, closed=True,
+    )
+    out: list[tuple] = []
+    tiers: set[int] = set()
+    for (rid, wkt), keys in zip(rows, covers):
+        if not keys:
+            continue
+        g = geom.geometry_from_wkt(wkt)
+        bx0, by0, bx1, by1 = (float(v) for v in g.bbox)
+        box = (bx0 - buffer, by0 - buffer, bx1 + buffer, by1 + buffer)
+        tp, cover = cells.unpack_key(np.asarray(keys, dtype=np.int64))
+        tp = int(tp[0])
+        tiers.add(tp)
+        flags = (tp, bool(g.is_box() and bx1 <= 180.0), box[0] < -180.0 or box[2] > 180.0)
+        for t in range(tp, -1, -1):
+            for k in cells.pack_key(t, np.unique(cells.cell_at_tier(cover, tp, t))).tolist():
+                out.append((int(k), rid, *box, *flags))
+    return out, sorted(tiers)
+
+
+def _box_relation(predicate: str) -> Column | None:
+    """Interval algebra over the candidate envelopes (_lx0.._ly1 vs
+    _rx0.._ry1, right pre-buffered for dwithin) — the pipeline's one box
+    expression table.  It is the bbox prefilter ("intersects"), the
+    NECESSARY envelope condition of the containment family (within(l,r) ⇒
+    bbox(l) ⊆ bbox(r), covers/contains ⇒ ⊇, equals ⇒ equal envelopes),
+    and the exact box×box refine when both geometries ARE their
+    envelopes.  None: no box twin (dwithin)."""
+    l0, m0, l1, m1 = (F.col(c) for c in ("_lx0", "_ly0", "_lx1", "_ly1"))
+    r0, s0, r1, s1 = (F.col(c) for c in ("_rx0", "_ry0", "_rx1", "_ry1"))
+    ix = (l0 <= r1) & (r0 <= l1) & (m0 <= s1) & (s0 <= m1)
+    interiors = (l0 < r1) & (r0 < l1) & (m0 < s1) & (s0 < m1)
+    l_cov_r = (l0 <= r0) & (m0 <= s0) & (l1 >= r1) & (m1 >= s1)
+    r_cov_l = (r0 <= l0) & (s0 <= m0) & (r1 >= l1) & (s1 >= m1)
+    return {
+        "intersects": ix,
+        "touches": ix & ~interiors,
+        "overlaps": interiors & ~l_cov_r & ~r_cov_l,
+        "within": r_cov_l,
+        "covers": l_cov_r,
+        "contains": l_cov_r,  # positive-area boxes: covers == contains
+        "equals": (l0 == r0) & (m0 == s0) & (l1 == r1) & (m1 == s1),
+        "crosses": F.lit(False),  # area × area never crosses
+    }.get(predicate)
+
+
+def _ref_point_filter(j: DataFrame) -> DataFrame:
+    """PBSM reference-point witness (Patel & DeWitt, SIGMOD'96 §4.3):
+    keep a joined row iff the cell at tier ``_kt`` containing the lower-
+    left corner (px, py) of bbox(l) ∩ bbox(r) is THIS join cell ``_cell``.
+    Each intersecting pair passes in exactly one (tier, cell), so the join
+    emits it exactly once — no pair-level dropDuplicates shuffle.
+
+    An unwrapped antimeridian right bbox (_rx1 > 180, its cover split
+    across the seam) that meets the left ONLY through its wrapped copy
+    takes the corner against the -360-shifted right bbox; otherwise the
+    plain corner is the witness, so seam pairs are neither dropped nor
+    duplicated (tests/test_geometry_join.py::test_exactly_once_antimeridian).
+
+    Uses the SAME normalization as the cover generation (norm_lon_upper so
+    px == +180 lands in the last column, matching the cover's clamp).
+
+    Codegen-size note (r4 perf fix): the original predicate interleaved
+    (gxp, gyp) and compared against ``_cell``; the inline Morton spread
+    duplicates its operand subtree 32x, and with the normalization inside
+    it the joined stage's generated Java exceeded the JVM's 64KB method
+    limit — Spark silently ran the hottest stage of the BIG x BIG extent
+    join in interpreted (non-codegen) mode.  Inverting the equality —
+    ``gxp == compact_x(_cell) AND gyp == compact_y(_cell)`` — puts the
+    duplication on the ``_cell`` ATTRIBUTE (tiny per copy) and references
+    each large normalization expression exactly once, so the whole filter
+    stays inside whole-stage codegen even when the optimizer folds it into
+    the join condition."""
+    j = j.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
+    j = j.withColumn("_rm", F.col("_rd").cast("long") - 1)
+    lx0, rx0 = F.col("_lx0"), F.col("_rx0")
+    wrapped_only = (F.col("_rx1") > 180.0) & (F.col("_lx1") < rx0)
+    px = F.when(wrapped_only, F.greatest(lx0, rx0 - 360.0)).otherwise(F.greatest(lx0, rx0))
+    py = F.greatest(F.col("_ly0"), F.col("_ry0"))
+    gxp = _grid(sqlcells.norm_lon_upper(px))
+    gyp = _grid(sqlcells.norm_lat(py))
+    return j.filter(
+        (gxp == sqlcells.compact_x(F.col("_cell")))
+        & (gyp == sqlcells.compact_y(F.col("_cell")))
+    )
+
+
+_NECESSARY = ("within", "covers", "contains", "equals")
+
+
+def _candidates(
+    lk: DataFrame, rk: DataFrame, predicate: str | None = None, witness: bool = True,
+) -> DataFrame:
+    """The shared candidate stage: packed-key equi-join → meet-tier filter
+    → JVM bbox prefilter → necessary-envelope filter → PBSM witness.
+
+    * meet tier: a pair's keys can meet at every common tier <= min(own
+      tiers), but a true pair always shares a key at exactly min(left own,
+      right own) — keys at coarser common tiers are dropped here, with
+      zero extra exchange;
+    * bbox prefilter: ``predicate=None`` is the bbox-only extent join,
+      where the prefilter IS the refine.  Exact-refine joins let unwrapped
+      antimeridian right envelopes (_rx1 > 180) through — the pairwise
+      refine tests their -360 copy;
+    * containment-family predicates keep only envelope-compatible pairs,
+      except rows flagged ``_lseam``/``_rseam`` (not a plain envelope);
+    * ``witness``: exactly-once emission without dropDuplicates."""
+    j = lk.join(rk, "key")
+    j = j.filter(F.col("_kt") == F.least(F.col("_lte"), F.col("_rte")))
+    overlap = _box_relation("intersects")
+    j = j.filter(overlap if predicate is None else overlap | (F.col("_rx1") > 180.0))
+    if predicate in _NECESSARY:
+        j = j.filter(_box_relation(predicate) | F.col("_lseam") | F.col("_rseam"))
+    return _ref_point_filter(j) if witness else j
+
+
+def _broadcast_candidates(
+    lb: DataFrame, cell_rows: list[tuple], tiers: list[int], id_type: str,
+    predicate: str | None = None, witness: bool = True,
+) -> DataFrame:
+    """Broadcastable right side: broadcast its driver-side cell rows
+    (`_cover_rows`) and key the big left side against the right tier
+    set."""
+    rk = F.broadcast(lb.sparkSession.createDataFrame(
+        cell_rows,
+        f"key long, _rid {id_type}, _rx0 double, _ry0 double, "
+        "_rx1 double, _ry1 double, _rte int, _rbox boolean, _rseam boolean",
+    ))
+    lk = _extent_multitier_keys(lb.withColumn("_lte", _extent_tier_expr("l")), "l", tiers)
+    return _candidates(lk, rk, predicate, witness)
+
+
+def _shuffle_candidates(
+    lc: DataFrame, l_tiers: list[int], rc: DataFrame, r_tiers: list[int],
+    predicate: str | None = None,
+) -> DataFrame:
+    """BIG×BIG: both sides discovered (`_discover`), each keyed at its own
+    tier plus every coarser tier present on the PARTNER side, met in one
+    shuffle equi-join; the keyed shuffle carries no WKT."""
+    lk = _extent_multitier_keys(lc.drop("_lwkt"), "l", r_tiers)
+    rk = _extent_multitier_keys(rc.drop("_rwkt"), "r", l_tiers).drop("_kt", "_cell")
+    return _candidates(lk, rk, predicate)
+
+
+def _id_type(df: DataFrame, col: str) -> str:
+    return df.schema[col].dataType.simpleString()
+
+
+def _collect_wkts(df: DataFrame, id_col: str, wkt_col: str) -> list[tuple]:
+    return [(r[0], r[1]) for r in df.select(id_col, wkt_col).collect()]
+
+
+def _pair_ids(j: DataFrame, left_id: str, right_id: str) -> DataFrame:
+    return j.select(F.col("_lid").alias(left_id), F.col("_rid").alias(right_id))
 
 
 def tiered_extent_join(
@@ -497,236 +773,31 @@ def tiered_extent_join(
     into one equi-join):
 
     * each extent row gets tier te = finest tier whose cell size >= its
-      normalized span (the estimated-count insert rule of
-      TieredSFCIndexStrategy.getEstimatedIdCount — span-based, so the
-      covering block is provably <= 2x2 = the default 2^d duplication
-      budget), and explodes into those <= 4 cells — pure Column math;
-    * a pair (extent@te, polygon@tp) must meet at min(te, tp): the
-      polygon's broadcast cell list carries its cover TRUNCATED to every
-      tier <= tp (driver-side, tiny), covering the te <= tp direction; the
-      extent additionally emits its cells truncated to each polygon tier
-      < te, covering the tp < te direction;
-    * equi-join on the packed key, exact bbox-intersects refine
-      (boundary-inclusive, JTS-intersects semantics), global dedupe.
+      normalized span and explodes into those <= 4 cells — pure Column
+      math; it additionally emits its cells at each polygon tier < te,
+      covering the tp < te direction;
+    * the polygon's broadcast cell list carries its untrimmed bbox cover
+      TRUNCATED to every tier <= tp (driver-side, tiny), covering the
+      te <= tp direction;
+    * the shared candidate stage (meet tier, boundary-inclusive bbox
+      intersects — JTS-intersects semantics — and the PBSM witness) emits
+      every pair exactly once.
 
     Output: (extent_id, polygon_id).  Verified against the brute-force
     bbox-intersect oracle — the same test design as the reference's
     GeoWaveSparkSpatialJoinIT brute-force comparison.
     """
-    import numpy as np
-
-    from .. import geom
-
-    spark = extents.sparkSession
-    if not probe_broadcastable(polygons, wkt_col):
-        # build-side guard (same as geometry_join's): never materialize an
-        # unbounded polygon side on the driver — derive its bboxes and
-        # route to the BIG×BIG shuffle twin, whose output contract
-        # (bbox-intersect pairs, same id columns) matches this join's
-        pb = polygons.withColumn("_b", geo_udfs.st_bbox(F.col(wkt_col))).select(
-            F.col(polygon_id),
-            F.col("_b.x0").alias("_rx0"), F.col("_b.y0").alias("_ry0"),
-            F.col("_b.x1").alias("_rx1"), F.col("_b.y1").alias("_ry1"),
-        )
-        return tiered_extent_join_shuffle(
-            extents, pb, left_id=extent_id, right_id=polygon_id,
-            lcols=(x0, y0, x1, y1), rcols=("_rx0", "_ry0", "_rx1", "_ry1"),
-        )
-    rows = [(r[0], r[1]) for r in polygons.select(polygon_id, wkt_col).collect()]
-    if not rows:
-        return extents.select(extent_id).limit(0).crossJoin(polygons.select(polygon_id).limit(0))
-
-    # polygon side: cover at its adaptive tier + truncations to every
-    # coarser tier (reprojectToTier, coarser direction); per-tier
-    # np.unique makes (pid, key) rows unique, and carrying the polygon's
-    # OWN tier enables the meet-tier restriction below
-    poly_rows: list[tuple] = []
-    poly_tiers: set[int] = set()
-    for pid, wkt in rows:
-        p = geom.geometry_from_wkt(wkt)
-        bx0, by0, bx1, by1 = p.bbox
-        # closed=True: query-side cover keeps boundary cells, matching the
-        # Column-side plain-floor covers and the reference point — with the
-        # insert convention (closed=False) a polygon whose upper edge sits
-        # exactly on a cell line (e.g. x1 = 0) could NEVER meet an extent
-        # touching it there, at any tier (missed pair, boundary-inclusive
-        # bbox-intersects contract)
-        tp, cover = cells.cells_for_bbox(
-            (bx0, by0, bx1, by1), max_dup=cells.JOIN_MAX_CELLS, closed=True
-        )
-        poly_tiers.add(tp)
-        for t in range(tp, -1, -1):
-            tc = np.unique(cells.cell_at_tier(cover, tp, t))
-            for k in cells.pack_key(t, tc).tolist():
-                poly_rows.append((int(k), pid, int(tp), float(bx0), float(by0), float(bx1), float(by1)))
-    right = F.broadcast(
-        spark.createDataFrame(
-            poly_rows,
-            "key long, _pid string, _ptp int, _px0 double, _py0 double, _px1 double, _py1 double",
-        ).withColumnRenamed("_pid", polygon_id)
-    )
-
-    # extent side: own-tier cover + covers re-derived at each coarser
-    # polygon tier ((id, key) rows unique by construction)
-    ec = extents.withColumn("_te", _extent_tier_expr(x0, y0, x1, y1))
-    ex_keys = _extent_multitier_keys(ec, extent_id, x0, y0, x1, y1, sorted(poly_tiers))
-
-    j = ex_keys.join(right, "key")
-    # exactly-once emission (PBSM reference point, as in the shuffle twin):
-    # a pair meets only at min(own tiers), in the one cell containing the
-    # bbox intersection's lower-left corner — no pair-level dropDuplicates
-    j = j.filter(F.col("_kt") == F.least(F.col("_te"), F.col("_ptp")))
-    refine = (
-        (F.col(x0) <= F.col("_px1")) & (F.col(x1) >= F.col("_px0"))
-        & (F.col(y0) <= F.col("_py1")) & (F.col(y1) >= F.col("_py0"))
-    )
-    j = j.filter(refine)
-    j = j.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-    j = j.withColumn("_rm", F.col("_rd").cast("long") - 1)
-    j = _ref_point_filter(
-        j,
-        F.greatest(F.col(x0), F.col("_px0")),
-        F.greatest(F.col(y0), F.col("_py0")),
-    )
-    return j.select(extent_id, polygon_id)
-
-
-def _extent_cells(
-    df: DataFrame, id_col: str, x0: str, y0: str, x1: str, y1: str,
-    extra_cols: tuple[str, ...] = (),
-    bounds=None,
-) -> DataFrame:
-    """Extent rows → (id, x0..y1, _te, _cell) at the span-based adaptive
-    tier (<= 4 cells per row) — pure Column math shared by both extent-join
-    paths."""
-    ex = df.withColumn("_te", _extent_tier_expr(x0, y0, x1, y1, bounds))
-    ex = ex.withColumn("_r", F.pow(F.lit(2.0), F.col("_te").cast("double")).cast("long"))
-    rl = F.col("_r").cast("double")
-    # norm_lon_upper on BOTH lon bounds (same seam rule as
-    # _extent_multitier_keys): identical to norm_lon everywhere except
-    # exactly +180, where the wrap would put the lower bound in cell 0
-    # while the upper clamps to r-1 — a degenerate x0=x1=180 box would
-    # otherwise explode a sequence over the whole 2^31-cell row
-    gx0 = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(F.col(x0), bounds) * rl), F.lit(0)), F.col("_r") - 1).cast("long")
-    gy0 = F.least(F.greatest(F.floor(sqlcells.norm_lat(F.col(y0), bounds) * rl), F.lit(0)), F.col("_r") - 1).cast("long")
-    gx1 = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(F.col(x1), bounds) * rl), gx0), F.col("_r") - 1).cast("long")
-    gy1 = F.least(F.greatest(F.floor(sqlcells.norm_lat(F.col(y1), bounds) * rl), gy0), F.col("_r") - 1).cast("long")
-    return (
-        ex.withColumn("_gx0", gx0).withColumn("_gx1", gx1)
-        .withColumn("_gy0", gy0).withColumn("_gy1", gy1)
-        .withColumn("_gx", F.explode(F.sequence(F.col("_gx0"), F.col("_gx1"))))
-        .withColumn("_gy", F.explode(F.sequence(F.col("_gy0"), F.col("_gy1"))))
-        .withColumn("_cell", sqlcells.interleave(F.col("_gx"), F.col("_gy")))
-        .select(id_col, x0, y0, x1, y1, "_te", "_cell", *extra_cols)
-    )
-
-
-def _extent_tier_expr(x0: str, y0: str, x1: str, y1: str, bounds=None) -> Column:
-    """Span-based adaptive tier for an extent row (same rule as
-    `_extent_cells` — tier t is the finest grid whose cell >= the extent's
-    span, so the cover is always <= 2x2 cells)."""
-    wx = 360.0 if bounds is None else float(bounds[2] - bounds[0])
-    wy = 180.0 if bounds is None else float(bounds[3] - bounds[1])
-    sx = (F.col(x1) - F.col(x0)) / F.lit(wx)
-    sy = (F.col(y1) - F.col(y0)) / F.lit(wy)
-    span = F.greatest(sx, sy, F.lit(0.0))
-    return (
-        F.when(span <= 0.0, F.lit(cells.MAX_TIER))
-        .otherwise(
-            F.least(F.greatest(F.floor(-F.log2(span)).cast("int"), F.lit(0)), F.lit(cells.MAX_TIER))
-        )
-    )
-
-
-def _extent_multitier_keys(
-    ex: DataFrame, id_col: str, x0: str, y0: str, x1: str, y1: str,
-    partner_tiers: list[int],
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Extent rows (pre-tagged with own tier ``_te``) → one row per
-    (extent, emission tier, covering cell), where the emission tiers are
-    the row's OWN tier plus every strictly-coarser tier present on the
-    partner side, and the cell cover is computed DIRECTLY at each emission
-    tier.
-
-    Because the cover is re-derived per tier (not truncated from the own-
-    tier cover), (id, key) rows are unique by construction — two own-tier
-    cells can never collapse onto the same coarse key twice.  This is what
-    makes the downstream reference-point join emission exact with NO
-    dropDuplicates (see `tiered_extent_join_shuffle`).
-
-    Output columns: id, x0..y1, extras, _te (own tier), _kt (emission
-    tier), _cell (Z-order cell at _kt), key (tier-packed long).
-    """
-    tier_arr = F.array(*[F.lit(int(t)) for t in sorted(set(partner_tiers))])
-    emit = F.array_append(F.filter(tier_arr, lambda t: t < F.col("_te")), F.col("_te"))
-    ex = ex.withColumn("_kt", F.explode(emit))
-    ex = ex.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-    ex = ex.withColumn("_rm", F.col("_rd").cast("long") - 1)
-    rd, rm = F.col("_rd"), F.col("_rm")
-    # norm_lon_upper on BOTH bounds: identical to norm_lon everywhere
-    # except exactly +180, where the wrap would put the lower bound in
-    # cell 0 while the upper clamps to r-1 — a degenerate seam box would
-    # otherwise cover the whole row (2^31 cells at the point tier)
-    gx0 = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(F.col(x0)) * rd), F.lit(0)), rm).cast("long")
-    gy0 = F.least(F.greatest(F.floor(sqlcells.norm_lat(F.col(y0)) * rd), F.lit(0)), rm).cast("long")
-    ex = ex.withColumn("_gx0", gx0).withColumn("_gy0", gy0)
-    gx1 = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(F.col(x1)) * rd), F.col("_gx0")), rm).cast("long")
-    gy1 = F.least(F.greatest(F.floor(sqlcells.norm_lat(F.col(y1)) * rd), F.col("_gy0")), rm).cast("long")
-    offs = F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
-    return (
-        ex.withColumn("_gx1", gx1).withColumn("_gy1", gy1)
-        .withColumn("_gx", F.explode(F.sequence(F.col("_gx0"), F.col("_gx1"))))
-        .withColumn("_gy", F.explode(F.sequence(F.col("_gy0"), F.col("_gy1"))))
-        .withColumn("_cell", sqlcells.interleave(F.col("_gx"), F.col("_gy")))
-        .withColumn("key", (F.element_at(offs, F.col("_kt") + 1) + F.col("_cell")).cast("long"))
-        .select(id_col, x0, y0, x1, y1, "_te", "_kt", "_cell", "key", *extra_cols)
-    )
-
-
-def _ref_point_filter(j: DataFrame, px: Column, py: Column) -> DataFrame:
-    """PBSM reference-point dedup filter (Patel & DeWitt, SIGMOD'96 §4.3):
-    keep a joined row iff the cell at tier ``_kt`` containing the bbox
-    intersection's lower-left corner (px, py) is THIS join cell ``_cell``.
-    Each truly-intersecting pair passes in exactly one (tier, cell), so
-    the join emits it exactly once — no pair-level dropDuplicates shuffle.
-
-    Uses the SAME normalization as the cover generation (norm_lon_upper so
-    px == +180 lands in the last column, matching the cover's clamp).
-
-    Codegen-size note (r4 perf fix): the original predicate interleaved
-    (gxp, gyp) and compared against ``_cell``; the inline Morton spread
-    duplicates its operand subtree 32x, and with the normalization inside
-    it the joined stage's generated Java exceeded the JVM's 64KB method
-    limit — Spark silently ran the hottest stage of the BIG x BIG extent
-    join in interpreted (non-codegen) mode.  Inverting the equality —
-    ``gxp == compact_x(_cell) AND gyp == compact_y(_cell)`` — puts the
-    duplication on the ``_cell`` ATTRIBUTE (tiny per copy) and references
-    each large normalization expression exactly once, so the whole filter
-    stays inside whole-stage codegen even when the optimizer folds it into
-    the join condition."""
-    rd, rm = F.col("_rd"), F.col("_rm")
-    gxp = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(px) * rd), F.lit(0)), rm).cast("long")
-    gyp = F.least(F.greatest(F.floor(sqlcells.norm_lat(py) * rd), F.lit(0)), rm).cast("long")
-    return j.filter(
-        (gxp == sqlcells.compact_x(F.col("_cell")))
-        & (gyp == sqlcells.compact_y(F.col("_cell")))
-    )
-
-
-def _extent_keys(ex_cells: DataFrame, partner_tiers: list[int]) -> DataFrame:
-    """Keys = own-tier cell + truncations to each coarser partner tier."""
-    offs = F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
-    own_key = F.element_at(offs, F.col("_te") + 1) + F.col("_cell")
-    trunc = [
-        F.when(
-            F.col("_te") > t,
-            F.lit(int(cells.TIER_OFFSETS[t])) + F.expr(f"shiftrightunsigned(_cell, 2 * (_te - {t}))"),
-        )
-        for t in sorted(partner_tiers)
-    ]
-    keys = F.array_compact(F.array(own_key.cast("long"), *[k.cast("long") for k in trunc]))
-    return ex_cells.withColumn("key", F.explode(keys)).drop("_te", "_cell")
+    lb = _bbox_frame(extents, extent_id, "l", bbox_cols=(x0, y0, x1, y1))
+    if probe_broadcastable(polygons, wkt_col):
+        cell_rows, tiers = _cover_rows(_collect_wkts(polygons, polygon_id, wkt_col))
+        j = _broadcast_candidates(lb, cell_rows, tiers, _id_type(polygons, polygon_id))
+    else:
+        # build-side guard: never materialize an unbounded polygon side on
+        # the driver — its bboxes take the BIG×BIG shuffle candidates
+        lc, l_tiers, _ = _discover(lb, "l")
+        rc, r_tiers, _ = _discover(_bbox_frame(polygons, polygon_id, "r", wkt_col).drop("_rwkt"), "r")
+        j = _shuffle_candidates(lc, l_tiers, rc, r_tiers)
+    return _pair_ids(j, extent_id, polygon_id)
 
 
 def tiered_extent_join_shuffle(
@@ -742,57 +813,16 @@ def tiered_extent_join_shuffle(
     key — the reference's full TieredSpatialJoin shape where neither side
     broadcasts (per-tier cogroups folded into one equi-join).
 
-    Tier discovery runs on BOTH sides (two tiny distinct aggregates —
-    TieredSpatialJoin.java:173-207 does the same with collectAsync), then
-    each side emits its bbox cover at its own tier plus at every coarser
-    tier PRESENT ON THE PARTNER side (cover re-derived per tier, so
-    (id, key) rows are unique).  A pair meets at exactly one tier — the
-    min of the two own tiers — and within that tier the PBSM
-    reference-point test keeps exactly one of its shared cells, so the
-    join emits every intersecting pair EXACTLY ONCE with no pair-level
-    dropDuplicates (the reference pays a DedupeFilter + distinct here;
-    at 10^8+ output pairs that distinct is the dominant shuffle).
+    A pair meets at exactly one tier — the min of the two own tiers — and
+    within that tier the PBSM reference-point test keeps exactly one of
+    its shared cells, so the join emits every intersecting pair EXACTLY
+    ONCE with no pair-level dropDuplicates (the reference pays a
+    DedupeFilter + distinct here; at 10^8+ output pairs that distinct is
+    the dominant shuffle).
     """
-    lx0, ly0, lx1, ly1 = lcols
-    rx0, ry0, rx1, ry1 = rcols
-    # localCheckpoint (MEMORY_AND_DISK, ContextCleaner-reclaimed): each
-    # side's bbox+tier projection computes once and serves both tier
-    # discovery and key generation
-    lc = left.select(left_id, lx0, ly0, lx1, ly1).withColumn(
-        "_te", _extent_tier_expr(lx0, ly0, lx1, ly1)).localCheckpoint()
-    rc = right.select(right_id, rx0, ry0, rx1, ry1).withColumn(
-        "_te", _extent_tier_expr(rx0, ry0, rx1, ry1)).localCheckpoint()
-    l_tiers = sorted(r[0] for r in lc.select("_te").distinct().collect())
-    r_tiers = sorted(r[0] for r in rc.select("_te").distinct().collect())
-    if not l_tiers or not r_tiers:
-        return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
-
-    lk = (
-        _extent_multitier_keys(lc, left_id, lx0, ly0, lx1, ly1, r_tiers)
-        .withColumnsRenamed({lx0: "_lx0", ly0: "_ly0", lx1: "_lx1", ly1: "_ly1", "_te": "_lte"})
-    )
-    rk = (
-        _extent_multitier_keys(rc, right_id, rx0, ry0, rx1, ry1, l_tiers)
-        .withColumnsRenamed({rx0: "_rx0", ry0: "_ry0", rx1: "_rx1", ry1: "_ry1", "_te": "_rte"})
-        .drop("_kt", "_cell")
-    )
-    j = lk.join(rk, "key")
-    # a pair's single meet tier is min(own tiers): keys at any common
-    # coarser tier are dropped here, keys at finer tiers never matched
-    j = j.filter(F.col("_kt") == F.least(F.col("_lte"), F.col("_rte")))
-    refine = (
-        (F.col("_lx0") <= F.col("_rx1")) & (F.col("_lx1") >= F.col("_rx0"))
-        & (F.col("_ly0") <= F.col("_ry1")) & (F.col("_ly1") >= F.col("_ry0"))
-    )
-    j = j.filter(refine)
-    j = j.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-    j = j.withColumn("_rm", F.col("_rd").cast("long") - 1)
-    j = _ref_point_filter(
-        j,
-        F.greatest(F.col("_lx0"), F.col("_rx0")),
-        F.greatest(F.col("_ly0"), F.col("_ry0")),
-    )
-    return j.select(left_id, right_id)
+    lc, l_tiers, _ = _discover(_bbox_frame(left, left_id, "l", bbox_cols=lcols), "l")
+    rc, r_tiers, _ = _discover(_bbox_frame(right, right_id, "r", bbox_cols=rcols), "r")
+    return _pair_ids(_shuffle_candidates(lc, l_tiers, rc, r_tiers), left_id, right_id)
 
 
 def semi_join_matches(points: DataFrame, pairs: DataFrame, point_id: str = "image_id") -> DataFrame:
@@ -839,28 +869,6 @@ def _pairwise_refine(j: DataFrame, predicate: str, radius: float) -> DataFrame:
     return j.filter(_PAIRWISE_UDF[predicate](la, ra))
 
 
-def _box_box_predicate(predicate: str):
-    """JVM Column twin of each predicate for axis-aligned box × box pairs
-    (exact interval algebra — the geometry IS its bbox).  Columns:
-    left (_lx0.._ly1), right (_rx0.._ry1, unbuffered)."""
-    l0, m0, l1, m1 = (F.col(c) for c in ("_lx0", "_ly0", "_lx1", "_ly1"))
-    r0, s0, r1, s1 = (F.col(c) for c in ("_rx0", "_ry0", "_rx1", "_ry1"))
-    ix = (l0 <= r1) & (r0 <= l1) & (m0 <= s1) & (s0 <= m1)
-    interiors = (l0 < r1) & (r0 < l1) & (m0 < s1) & (s0 < m1)
-    l_cov_r = (l0 <= r0) & (m0 <= s0) & (l1 >= r1) & (m1 >= s1)
-    r_cov_l = (r0 <= l0) & (s0 <= m0) & (r1 >= l1) & (s1 >= m1)
-    return {
-        "intersects": ix,
-        "touches": ix & ~interiors,
-        "overlaps": interiors & ~l_cov_r & ~r_cov_l,
-        "within": r_cov_l,
-        "covers": l_cov_r,
-        "contains": l_cov_r,  # positive-area boxes: covers == contains
-        "equals": (l0 == r0) & (m0 == s0) & (l1 == r1) & (m1 == s1),
-        "crosses": F.lit(False),  # area × area never crosses
-    }.get(predicate)
-
-
 def geometry_join(
     left: DataFrame,
     right: DataFrame,
@@ -901,30 +909,19 @@ def geometry_join(
     The reference's full TieredSpatialJoin over arbitrary JTS geometries
     (TieredSpatialJoin.java:75-377; its flagship IT is hail points ×
     tornado-track LINESTRINGs, GeoWaveSparkSpatialJoinIT.java:97-175),
-    folded into one plan:
-
-    * right (broadcastable) side: driver-side adaptive-tier cover of each
-      geometry (trimmed to cells the true geometry touches; buffered by
-      `radius` for dwithin) + truncations to every coarser tier — the
-      reprojectToTier direction where the right side is coarser;
-    * left (big) side: bbox via one Arrow-batched UDF, span-based adaptive
-      tier (<= 4 cells, pure Column math), keys at its own tier plus
-      truncations to each coarser right-side tier;
-    * equi-join on the packed key → JVM bbox prefilter → exact pairwise
-      refine (st_intersects_wkt / st_distance_wkt, candidate pairs only)
-      → dedupe (DedupeFilter semantics — extents meet in multiple cells).
+    folded into one plan: driver-side right cells (trimmed, buffered by
+    `radius` for dwithin) broadcast against the left side's multi-tier
+    Column keys → the shared candidate stage → exact pairwise refine
+    (candidate pairs only, the right WKT broadcast once per geometry and
+    joined by id) → dedupe (DedupeFilter semantics — extents meet in
+    multiple cells).  Oversized right sides route to
+    `geometry_join_shuffle`.
 
     Output: (left_id, right_id) pairs.
     """
-    import numpy as np
-    import pandas as pd
-
-    from .. import geom
-
     if predicate not in GEOMETRY_JOIN_PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
     buffer = radius if predicate == "dwithin" else 0.0
-    spark = left.sparkSession
     if not probe_broadcastable(right, right_wkt):
         # build-side guard: never materialize an unbounded right side on
         # the driver — route oversized builds to the keyed-shuffle twin
@@ -935,177 +932,37 @@ def geometry_join(
             left_wkt=left_wkt, right_wkt=right_wkt,
             left_bbox_cols=left_bbox_cols,
         )
-    rows = [(r[0], r[1]) for r in right.select(right_id, right_wkt).collect()]
-    if not rows:
-        return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
+    # the left side is keyed unsplit: only flag envelopes past the seam
+    lb = _bbox_frame(left, left_id, "l", left_wkt, left_bbox_cols)
+    lb = lb.withColumn("_lseam", (F.col("_lx0") < -180.0) | (F.col("_lx1") > 180.0))
+    rows, id_type = _collect_wkts(right, right_id, right_wkt), _id_type(right, right_id)
+    # exactly-once emission needs FULL bbox covers: the PBSM reference
+    # point is a bbox-intersection corner, which a geometry-trimmed cover
+    # may not contain
+    cell_rows, tiers = _cover_rows(rows, buffer, trim=not exactly_once, max_cells=max_cells)
+    j = _broadcast_candidates(lb, cell_rows, tiers, id_type, predicate, witness=exactly_once)
+    wkts = F.broadcast(left.sparkSession.createDataFrame(rows, f"_rid {id_type}, _rwkt string"))
 
-    covers = geo_udfs.cover_keys(
-        pd.Series([w for _, w in rows]),
-        max_cells=max_cells, buffer=buffer,
-        # exactly-once emission needs FULL bbox covers: the PBSM reference
-        # point is a bbox-intersection corner, which a geometry-trimmed
-        # cover may not contain
-        trim=not buffer and not exactly_once,
-        # boundary-closed cover: a right geometry whose upper edge lies
-        # exactly on a cell line still meets left extents touching it from
-        # the next cell (the Column-math left cover is already closed).
-        # Buffered (dwithin) covers need this too: a partner at EXACTLY
-        # distance `radius` on a cell line past the buffered bbox's upper
-        # edge lands in the next cell, and the refine's <= would accept it.
-        closed=True,
-    )
-    cell_rows: list[tuple] = []
-    r_tiers: set[int] = set()
-    for (rid, wkt), keys in zip(rows, covers):
-        g = geom.geometry_from_wkt(wkt)
-        bx0, by0, bx1, by1 = g.bbox
-        # this right geometry IS its bbox (axis-aligned box, no holes, in
-        # range): box×box candidates can refine JVM-side (interval algebra)
-        rbox = bool(g.is_box() and bx1 <= 180.0)
-        keys = np.asarray(keys, dtype=np.int64)
-        if not keys.size:
-            continue
-        tp, cover = cells.unpack_key(keys)
-        tp = int(tp[0])
-        r_tiers.add(tp)
-        for t in range(tp, -1, -1):
-            tc = np.unique(cells.cell_at_tier(cover, tp, t))
-            for k in cells.pack_key(t, tc).tolist():
-                cell_rows.append(
-                    (int(k), rid, float(bx0 - buffer), float(by0 - buffer),
-                     float(bx1 + buffer), float(by1 + buffer), rbox, tp)
-                )
-    if not r_tiers:
-        return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
+    def exact(c: DataFrame) -> DataFrame:
+        return _pairwise_refine(c.join(wkts, "_rid"), predicate, radius).select("_lid", "_rid")
 
-    right_cells = F.broadcast(
-        spark.createDataFrame(
-            cell_rows,
-            "key long, _rid string, _rx0 double, _ry0 double, _rx1 double, _ry1 double, _rbox boolean, _rtp int",
-        )
-    )
-    right_wkts = F.broadcast(
-        spark.createDataFrame(list(rows), "_rid string, _rwkt string")
-    )
-
-    if left_bbox_cols is not None:
-        bx0, by0, bx1, by1 = left_bbox_cols
-        lb = left.select(
-            left_id,
-            F.col(left_wkt).alias("_lwkt"),
-            F.col(bx0).alias("_lx0"), F.col(by0).alias("_ly0"),
-            F.col(bx1).alias("_lx1"), F.col(by1).alias("_ly1"),
-        )
+    box = _box_relation(predicate) if left_is_box else None
+    if box is None:
+        out = exact(j)
+    elif all(r[7] for r in cell_rows):  # every right geometry is a box
+        out = j.filter(box).select("_lid", "_rid")
     else:
-        lb = left.select(left_id, left_wkt).withColumn(
-            "_bb", geo_udfs.st_bbox(F.col(left_wkt))
-        ).select(
-            left_id,
-            F.col(left_wkt).alias("_lwkt"),
-            F.col("_bb.x0").alias("_lx0"), F.col("_bb.y0").alias("_ly0"),
-            F.col("_bb.x1").alias("_lx1"), F.col("_bb.y1").alias("_ly1"),
-        )
-    ec = lb.withColumn("_te", _extent_tier_expr("_lx0", "_ly0", "_lx1", "_ly1"))
-    lk = _extent_multitier_keys(
-        ec, left_id, "_lx0", "_ly0", "_lx1", "_ly1", sorted(r_tiers),
-        extra_cols=("_lwkt",),
-    )
-
-    j = lk.join(right_cells, "key")
-    # meet-tier filter (the shuffle twin's exactly-once-per-tier rule): a
-    # true pair always shares a key at tier min(left own, right own) — a
-    # geometry point inside the bbox overlap keys a trimmed right cell
-    # whose ancestor both sides emit.  This cuts the cross-tier duplicate
-    # candidates BEFORE the Arrow refine with zero extra exchange (a
-    # measured dedupe-exchange here costs more than the duplicate refines
-    # it saves); only the <= 4 same-tier multi-cell duplicates remain for
-    # the cheap post-refine dropDuplicates.
-    j = j.filter(F.col("_kt") == F.least(F.col("_te"), F.col("_rtp")))
-    # JVM bbox prefilter (right bbox pre-buffered for dwithin); unwrapped
-    # antimeridian right geometries (x1 > 180) skip it — exactness comes
-    # from the pairwise refine which tests the +360 copy
-    prefilter = (
-        (F.col("_lx0") <= F.col("_rx1")) & (F.col("_lx1") >= F.col("_rx0"))
-        & (F.col("_ly0") <= F.col("_ry1")) & (F.col("_ly1") >= F.col("_ry0"))
-    ) | (F.col("_rx1") > 180.0)
-    j = j.filter(prefilter)
-    # containment-family predicates admit a stronger JVM-side NECESSARY
-    # envelope condition than plain overlap (within(l,r) ⇒ bbox(l) ⊆
-    # bbox(r), covers/contains(l,r) ⇒ bbox(l) ⊇ bbox(r), equals ⇒ equal
-    # envelopes) — it prunes most candidates before the Arrow refine ever
-    # sees them.  Unwrapped antimeridian right geometries keep the escape.
-    l_in_r = (
-        (F.col("_lx0") >= F.col("_rx0")) & (F.col("_lx1") <= F.col("_rx1"))
-        & (F.col("_ly0") >= F.col("_ry0")) & (F.col("_ly1") <= F.col("_ry1"))
-    )
-    r_in_l = (
-        (F.col("_lx0") <= F.col("_rx0")) & (F.col("_lx1") >= F.col("_rx1"))
-        & (F.col("_ly0") <= F.col("_ry0")) & (F.col("_ly1") >= F.col("_ry1"))
-    )
-    necessary = {
-        "within": l_in_r,
-        "covers": r_in_l,
-        "contains": r_in_l,
-        "equals": l_in_r & r_in_l,
-    }.get(predicate)
-    if necessary is not None and not buffer:
-        # either side unwrapped across the antimeridian → envelopes are not
-        # comparable in plain coordinates; leave those to the exact refine
-        j = j.filter(necessary | (F.col("_rx1") > 180.0) | (F.col("_lx1") > 180.0))
-
-    if exactly_once:
-        # PBSM reference-point emission BEFORE the refine: every candidate
-        # pair survives in exactly the one (tier, cell) containing the
-        # lower-left corner of bbox(l) ∩ bbox(r) (right bbox pre-buffered
-        # for dwithin) — no dropDuplicates anywhere in the plan.
-        # Unwrapped antimeridian right geometries (_rx1 > 180, cover split
-        # across the seam by _split_for_cover): when the pair overlaps the
-        # plain copy in x, the plain corner is the witness cell (wrapped-
-        # side duplicates fail the equality); when it meets ONLY the
-        # wrapped copy, the corner is taken against the -360-shifted right
-        # bbox — both cases land in exactly one shared candidate cell, so
-        # seam pairs are neither dropped nor duplicated (review r5 fix;
-        # tests/test_geometry_join.py::test_exactly_once_antimeridian).
-        j = j.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-        j = j.withColumn("_rm", F.col("_rd").cast("long") - 1)
-        wrapped_only = (F.col("_rx1") > 180.0) & (F.col("_lx1") < F.col("_rx0"))
-        px = F.when(
-            wrapped_only, F.greatest(F.col("_lx0"), F.col("_rx0") - 360.0)
-        ).otherwise(F.greatest(F.col("_lx0"), F.col("_rx0")))
-        j = _ref_point_filter(
-            j, px, F.greatest(F.col("_ly0"), F.col("_ry0"))
-        )
-
-    box_pred = _box_box_predicate(predicate) if left_is_box and not buffer else None
-    if box_pred is not None:
         # box×box candidates never touch Python OR the WKT column: the
-        # interval-algebra predicate refines them inside the same codegen
-        # stage (the common case — box workloads stay 100% JVM); only
-        # candidates with a non-box right geometry take the Arrow refine.
-        # Which rids are boxes is known driver-side — no runtime probe.
-        j_box = j.filter(F.col("_rbox")).filter(box_pred).select(
-            F.col(left_id), F.col("_rid").alias(right_id)
+        # interval algebra refines them inside the join's codegen stage;
+        # which right ids are boxes is known driver-side — no runtime probe
+        out = j.filter(F.col("_rbox") & box).select("_lid", "_rid").unionByName(
+            exact(j.filter(~F.col("_rbox")))
         )
-        if not exactly_once:
-            j_box = j_box.dropDuplicates([left_id, right_id])
-        if all(r[6] for r in cell_rows):  # every right geometry is a box
-            return j_box
-        j_gen = _pairwise_refine(
-            j.filter(~F.col("_rbox")).join(right_wkts, "_rid"), predicate, radius
-        )
-        # box/general right ids are disjoint sets; the meet-tier filter
-        # leaves only same-tier multi-cell duplicates — deduped on the
-        # (small) refined output
-        j_gen = j_gen.select(F.col(left_id), F.col("_rid").alias(right_id))
-        if not exactly_once:
-            j_gen = j_gen.dropDuplicates([left_id, right_id])
-        return j_box.unionByName(j_gen)
-
-    j = _pairwise_refine(j.join(right_wkts, "_rid"), predicate, radius)
-    out = j.select(F.col(left_id), F.col("_rid").alias(right_id))
     if not exactly_once:
-        out = out.dropDuplicates([left_id, right_id])
-    return out
+        # the meet-tier filter leaves only the <= 4 same-tier multi-cell
+        # duplicates, deduped on the (small) refined output
+        out = out.dropDuplicates()
+    return _pair_ids(out, left_id, right_id)
 
 
 def geometry_join_shuffle(
@@ -1117,154 +974,44 @@ def geometry_join_shuffle(
     right_id: str = "right_id",
     left_wkt: str = "wkt",
     right_wkt: str = "wkt",
-    carry_wkt: bool = False,
     left_bbox_cols: tuple[str, str, str, str] | None = None,
 ) -> DataFrame:
     """BIG × BIG geometry join: both sides bbox'd (one Arrow UDF each),
-    adaptively tiered + symmetrically truncated (tiered_extent_join_shuffle
-    machinery), met on the packed key, bbox-prefiltered JVM-side, then
-    exact pairwise refine on the surviving candidates only.
+    seam-split, then the shared shuffle candidates (tiered_extent_join_shuffle
+    machinery: every candidate envelope pair exactly once) and an exact
+    pairwise refine on the surviving pairs only.
 
     dwithin buffers the LEFT bbox by radius before tiering (sufficient:
     any pair within r overlaps after one side's expansion).
 
-    ``carry_wkt``: False (default) keeps the keyed shuffle NARROW (ids +
-    bboxes only), dedupes candidate id pairs first, then joins the WKTs
-    back by id for the refine — measured faster already at 60-byte WKTs
-    (BENCH.md), and the gap widens with geometry size since the text is
-    never duplicated into covering-cell rows.  True rides the WKT through
-    the single keyed shuffle (fewer joins; fine for tiny geometry sets).
+    The keyed shuffle stays NARROW (ids + bboxes only): candidate id pairs
+    join their WKTs back by id for the refine — measured faster already at
+    60-byte WKTs (BENCH.md), and the gap widens with geometry size since
+    the text is never duplicated into covering-cell rows.
 
     ``left_bbox_cols``: precomputed left envelopes — skips the WKT→bbox
     Arrow pass (same contract as geometry_join).
 
-    Unwrapped antimeridian WKTs (x1 > 180, the LongitudeDefinition
-    convention) are handled like the broadcast path: the envelope is SPLIT
-    into its [-180,180] images ([x0,180] plus [-180, x1-360]) so the cell
-    cover reaches both sides of the wrap; exactness then comes from the
-    pairwise refine, which also evaluates the -360-shifted image.
+    Unwrapped antimeridian envelopes (x1 > 180, the LongitudeDefinition
+    convention) are SPLIT into their [-180, 180] images (`_seam_split`) so
+    the cell cover reaches both sides of the wrap; exactness then comes
+    from the pairwise refine, which also evaluates the -360-shifted image.
+    A split envelope can meet a partner once per image, so only then are
+    the candidate pairs (and the WKT lookups) deduplicated.
     """
     if predicate not in GEOMETRY_JOIN_PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
     buffer = radius if predicate == "dwithin" else 0.0
-
-    def bboxed(df, id_col, wkt_col, prefix, pad, bbox_cols=None):
-        if bbox_cols is not None:
-            x0c, y0c, x1c, y1c = (F.col(c) for c in bbox_cols)
-            b = df.select(id_col, wkt_col, *bbox_cols)
-        else:
-            b = df.select(id_col, wkt_col).withColumn(
-                "_bb", geo_udfs.st_bbox(F.col(wkt_col))
-            )
-            x0c, y0c, x1c, y1c = (F.col(f"_bb.{c}") for c in ("x0", "y0", "x1", "y1"))
-        # antimeridian-crossing envelopes (x1 > 180) split into two
-        # in-range images; everything else keeps one row (_seg = 0).
-        # dwithin padding below -180 is clamped, not wrapped: the pairwise
-        # kernel is planar, so no cross-meridian match exists there to keep
-        b = b.withColumn(
-            "_seg",
-            F.explode(
-                F.when((x1c + pad) > 180.0, F.array(F.lit(0), F.lit(1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        wrapped = F.col("_seg") == 1
-        return b.select(
-            id_col,
-            "_seg",
-            ((x1c + pad) > 180.0).alias(f"{prefix}split"),
-            F.col(wkt_col).alias(f"{prefix}wkt"),
-            F.when(wrapped, F.lit(-180.0))
-            .otherwise(F.greatest(x0c - pad, F.lit(-180.0)))
-            .alias(f"{prefix}x0"),
-            (y0c - pad).alias(f"{prefix}y0"),
-            F.when(wrapped, x1c + pad - 360.0)
-            .otherwise(F.least(x1c + pad, F.lit(180.0)))
-            .alias(f"{prefix}x1"),
-            (y1c + pad).alias(f"{prefix}y1"),
-        )
-
-    lb = bboxed(left, left_id, left_wkt, "_l", buffer, left_bbox_cols)
-    rb = bboxed(right, right_id, right_wkt, "_r", 0.0)
-    l_extra = ("_lwkt",) if carry_wkt else ()
-    r_extra = ("_rwkt",) if carry_wkt else ()
-    lc = lb.withColumn(
-        "_te", _extent_tier_expr("_lx0", "_ly0", "_lx1", "_ly1")
-    ).localCheckpoint()
-    rc = rb.withColumn(
-        "_te", _extent_tier_expr("_rx0", "_ry0", "_rx1", "_ry1")
-    ).localCheckpoint()
-    # one pass per side: own-tier set for the symmetric truncation AND
-    # whether any antimeridian split happened (split envelopes are the one
-    # case where a pair can be emitted from two different segment pairs)
-    lrow = lc.agg(F.collect_set("_te"), F.max("_seg")).first()
-    rrow = rc.agg(F.collect_set("_te"), F.max("_seg")).first()
-    l_tiers, r_tiers = sorted(lrow[0] or []), sorted(rrow[0] or [])
-    if not l_tiers or not r_tiers:
-        return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
-    any_split = bool(lrow[1]) or bool(rrow[1])
-    lk = _extent_multitier_keys(
-        lc, left_id, "_lx0", "_ly0", "_lx1", "_ly1", r_tiers,
-        extra_cols=l_extra + ("_lsplit",),
-    ).withColumnRenamed("_te", "_lte")
-    rk = (
-        _extent_multitier_keys(
-            rc, right_id, "_rx0", "_ry0", "_rx1", "_ry1", l_tiers,
-            extra_cols=r_extra + ("_rsplit",),
-        )
-        .withColumnRenamed("_te", "_rte")
-        .drop("_kt", "_cell")
-    )
-    j = lk.join(rk, "key")
-    j = j.filter(F.col("_kt") == F.least(F.col("_lte"), F.col("_rte")))
-    j = j.filter(
-        (F.col("_lx0") <= F.col("_rx1")) & (F.col("_lx1") >= F.col("_rx0"))
-        & (F.col("_ly0") <= F.col("_ry1")) & (F.col("_ly1") >= F.col("_ry0"))
-    )
-    # containment-family necessary envelope conditions (same pruning as the
-    # broadcast path): within(l,r) ⇒ bbox(l) ⊆ bbox(r) etc.  Only valid on
-    # UNSPLIT envelopes — an antimeridian-split geometry's per-image boxes
-    # are not its full envelope, so split rows skip straight to the refine
-    l_in_r = (
-        (F.col("_lx0") >= F.col("_rx0")) & (F.col("_lx1") <= F.col("_rx1"))
-        & (F.col("_ly0") >= F.col("_ry0")) & (F.col("_ly1") <= F.col("_ry1"))
-    )
-    r_in_l = (
-        (F.col("_lx0") <= F.col("_rx0")) & (F.col("_lx1") >= F.col("_rx1"))
-        & (F.col("_ly0") <= F.col("_ry0")) & (F.col("_ly1") >= F.col("_ry1"))
-    )
-    necessary = {
-        "within": l_in_r,
-        "covers": r_in_l,
-        "contains": r_in_l,
-        "equals": l_in_r & r_in_l,
-    }.get(predicate)
-    if necessary is not None and not buffer:
-        j = j.filter(necessary | F.col("_lsplit") | F.col("_rsplit"))
-    # PBSM reference point: each candidate (envelope, envelope) pair
-    # survives in exactly one (tier, cell) — candidate pairs are unique
-    # WITHOUT any dropDuplicates shuffle unless a split occurred
-    j = j.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-    j = j.withColumn("_rm", F.col("_rd").cast("long") - 1)
-    j = _ref_point_filter(
-        j,
-        F.greatest(F.col("_lx0"), F.col("_rx0")),
-        F.greatest(F.col("_ly0"), F.col("_ry0")),
-    )
-    if not carry_wkt:
-        # narrow path: candidate id pairs (already unique unless split),
-        # then join the geometry text back by id for the refine (the WKT
-        # lookups dedupe by id: split antimeridian envelopes carry the
-        # same WKT on both _seg rows)
-        pairs = j.select(left_id, right_id)
-        if any_split:
-            pairs = pairs.dropDuplicates([left_id, right_id])
-        j = pairs.join(
-            lb.select(left_id, "_lwkt").dropDuplicates([left_id]), left_id
-        ).join(rb.select(right_id, "_rwkt").dropDuplicates([right_id]), right_id)
-    j = _pairwise_refine(j, predicate, radius)
-    out = j.select(left_id, right_id)
-    return out if not (carry_wkt and any_split) else out.dropDuplicates([left_id, right_id])
+    lb = _seam_split(_bbox_frame(left, left_id, "l", left_wkt, left_bbox_cols, pad=buffer), "l")
+    rb = _seam_split(_bbox_frame(right, right_id, "r", right_wkt), "r")
+    lc, l_tiers, l_seam = _discover(lb, "l")
+    rc, r_tiers, r_seam = _discover(rb, "r")
+    j = _shuffle_candidates(lc, l_tiers, rc, r_tiers, predicate)
+    pairs, lw, rw = j.select("_lid", "_rid"), lc.select("_lid", "_lwkt"), rc.select("_rid", "_rwkt")
+    if l_seam or r_seam:
+        pairs, lw, rw = pairs.dropDuplicates(), lw.dropDuplicates(["_lid"]), rw.dropDuplicates(["_rid"])
+    out = _pairwise_refine(pairs.join(lw, "_lid").join(rw, "_rid"), predicate, radius)
+    return _pair_ids(out, left_id, right_id)
 
 
 def brute_force_join(

@@ -15,6 +15,24 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="module", autouse=True)
+def no_cached_relations_left():
+    """Session hygiene: a test module must unpersist every relation it
+    caches — a cached InMemoryRelation leaks into later modules' plans
+    (and their plan assertions).  The cache is cleared after a failure
+    so one leak does not fail every later module too."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is None:
+        return
+    cache = active._jsparkSession.sharedState().cacheManager()
+    if not cache.isEmpty():
+        cache.clearCache()
+        pytest.fail("test module left cached relations behind (unpersist in fixture teardown)")
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -72,6 +72,28 @@ def test_geometry_frame_join_paths(spark):
     assert bc == sh == auto and len(bc) > 0
 
 
+def test_geometry_frame_join_probes_build_side_once(spark, monkeypatch):
+    """The build-side decision is made once per join: the facade leaves
+    it to geometry_join's probe instead of probing first itself."""
+    from geowave_spark.api import GeometryFrame
+
+    calls = []
+    probe = spatial_join.probe_broadcastable
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return probe(*a, **kw)
+
+    monkeypatch.setattr(spatial_join, "probe_broadcastable", counted)
+    left = spark.createDataFrame([("a", "LINESTRING (0 0, 2 1)")], ["seg_id", "wkt"])
+    right = spark.createDataFrame(
+        [("r", "POLYGON ((0 0, 3 0, 3 3, 0 3, 0 0))")], ["poly_id", "wkt"]
+    )
+    got = GeometryFrame(left, "seg_id").join(right, "poly_id").collect()
+    assert [tuple(r) for r in got] == [("a", "r")]
+    assert len(calls) == 1
+
+
 def test_geometry_frame_within_predicate(spark):
     from geowave_spark.api import GeometryFrame
     from geowave_spark import entry_queries as eq

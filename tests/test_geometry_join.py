@@ -12,6 +12,7 @@ import os
 import sys
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -281,22 +282,17 @@ def test_knn_adaptive_many_queries(spark):
     assert g == ww and len(g) == 30_000
 
 
-def test_geometry_join_shuffle_narrow_wkt_path(spark):
-    """carry_wkt=False (narrow keyed shuffle, WKT joined back by id)
-    produces identical pairs to the default path."""
+def test_geometry_join_shuffle_dwithin_matches_broadcast(spark):
+    """The shuffle join (narrow keyed shuffle, WKT joined back by id, left
+    bbox padded by the radius) returns the broadcast join's dwithin
+    pairs."""
     segs = _event_segments(spark)
     right = spark.createDataFrame(_geoms_mixed(), ["right_id", "wkt"])
-    wide = sorted(map(tuple, spatial_join.geometry_join_shuffle(
-        segs, right, carry_wkt=True).collect()))
-    narrow = sorted(map(tuple, spatial_join.geometry_join_shuffle(
-        segs, right, carry_wkt=False).collect()))
-    assert wide == narrow and len(narrow) > 0
-    # dwithin too
-    wide_d = sorted(map(tuple, spatial_join.geometry_join_shuffle(
-        segs, right, predicate="dwithin", radius=1.0, carry_wkt=True).collect()))
-    narrow_d = sorted(map(tuple, spatial_join.geometry_join_shuffle(
-        segs, right, predicate="dwithin", radius=1.0, carry_wkt=False).collect()))
-    assert wide_d == narrow_d and len(narrow_d) > 0
+    bc = sorted(map(tuple, spatial_join.geometry_join(
+        segs, right, predicate="dwithin", radius=1.0).collect()))
+    sh = sorted(map(tuple, spatial_join.geometry_join_shuffle(
+        segs, right, predicate="dwithin", radius=1.0).collect()))
+    assert bc == sh and len(sh) > 0
 
 
 def test_shuffle_dwithin_near_antimeridian_keeps_same_side_matches(spark):
@@ -347,12 +343,23 @@ def test_unwrapped_right_geometry_matches_across_meridian(spark):
     assert r["i"] is True
 
 
-def test_interior_predicates_join_matches_brute_force(spark):
-    """touches / crosses / overlaps / contains through the FULL join path
-    (cover → cell equi-join → prefilter → refine) equal brute-force
-    nested-loop evaluation of the same kernels, on a grid-snapped workload
-    where boundary-only contact is common (the candidate-generation trap:
-    touch cells sit exactly on cell lines)."""
+_BUILD_PATHS = {
+    "broadcast": spatial_join.geometry_join,
+    "exactly_once": lambda *a, **kw: spatial_join.geometry_join(*a, exactly_once=True, **kw),
+    "shuffle": spatial_join.geometry_join_shuffle,
+}
+
+
+@pytest.mark.parametrize("path", sorted(_BUILD_PATHS))
+def test_interior_predicates_join_matches_brute_force(spark, path):
+    """touches / crosses / overlaps / contains / covers / equals through
+    the FULL join path (cover → cell equi-join → prefilter → refine) of
+    every build path equal brute-force nested-loop evaluation of the same
+    kernels, on a grid-snapped workload where boundary-only contact is
+    common (the candidate-generation trap: touch cells sit exactly on cell
+    lines).  Right geometries cross or start at the antimeridian in the
+    unwrapped (x1 > 180) form, which the kernels also test as its -360
+    image, and left rows touch them at exactly x = 180."""
     rng = np.random.RandomState(99)
     lefts = []
     for i in range(300):
@@ -368,6 +375,10 @@ def test_interior_predicates_join_matches_brute_force(spark):
         else:  # integer point
             wkt = f"POINT ({x0} {y0})"
         lefts.append((i, wkt))
+    # rows touching the antimeridian at exactly x = 180: a point on an
+    # edge ending there, and a box touching an unwrapped box starting there
+    lefts += [(300, "POINT (180 10)"),
+              (301, "POLYGON ((170 -60, 180 -60, 180 -50, 170 -50, 170 -60))")]
     rights = [
         ("r_eu", "POLYGON ((0 40, 30 40, 30 60, 0 60, 0 40))"),
         ("r_hole", "POLYGON ((-75 -35, -40 -35, -40 0, -75 0, -75 -35), "
@@ -376,6 +387,10 @@ def test_interior_predicates_join_matches_brute_force(spark):
         ("r_mp", "MULTIPOLYGON (((95 15, 125 15, 125 40, 95 40, 95 15)), "
                  "((-15 -65, 25 -65, 25 -45, -15 -45, -15 -65)))"),
         ("r_box", "POLYGON ((60 -30, 110 -30, 110 10, 60 10, 60 -30))"),
+        ("r_seam", "POLYGON ((168 -30, 192 -30, 192 30, 168 30, 168 -30))"),
+        ("r_west", "POLYGON ((170 0, 180 0, 180 20, 170 20, 170 0))"),
+        ("r_east", "POLYGON ((180 -60, 190 -60, 190 -50, 180 -50, 180 -60))"),
+        ("r_eq", lefts[0][1]),
     ]
     ldf = spark.createDataFrame(lefts, ["left_id", "wkt"])
     rdf = spark.createDataFrame(rights, ["right_id", "wkt"])
@@ -384,24 +399,35 @@ def test_interior_predicates_join_matches_brute_force(spark):
         "crosses": geom.crosses_pair,
         "overlaps": geom.overlaps_pair,
         "contains": geom.contains_pair,
+        "covers": geom.covers_pair,
+        "equals": geom.equals_pair,
         "within": geom.within_pair,
-        "intersects": geom.intersects_pair,
+        "intersects": geom.intersects_pair,  # last: its pairs are checked below
     }
-    parsed_r = [(rid, geom.geometry_from_wkt(w)) for rid, w in rights]
+    # each right geometry with its -360 image when unwrapped (x1 > 180)
+    parsed_r = []
+    for rid, w in rights:
+        g = geom.geometry_from_wkt(w)
+        shifted = [geom.translate_lon(g, -360.0)] if g.bbox[2] > 180.0 else []
+        parsed_r.append((rid, [g] + shifted))
+    join = _BUILD_PATHS[path]
     for pred, fn in kernels.items():
-        got = set(
+        got = [
             (r[0], r[1])
-            for r in spatial_join.geometry_join(
-                ldf, rdf, predicate=pred, left_id="left_id", right_id="right_id"
-            ).collect()
-        )
+            for r in join(ldf, rdf, predicate=pred, left_id="left_id", right_id="right_id").collect()
+        ]
+        assert len(got) == len(set(got)), (pred, "duplicate pairs")
         want = set()
         for lid, lw in lefts:
             gl = geom.geometry_from_wkt(lw)
-            for rid, gr in parsed_r:
-                if fn(gl, gr):
+            for rid, images in parsed_r:
+                if any(fn(gl, gr) for gr in images):
                     want.add((lid, rid))
-        assert got == want, (pred, got ^ want)
+        assert set(got) == want, (pred, set(got) ^ want)
+    # the seam geometry intersects left rows on both sides of the antimeridian
+    xs = {int(lefts[lid][1].split("(")[-1].split()[0]) for lid, rid in got if rid == "r_seam"}
+    assert min(xs) < 0 < max(xs)
+    assert {(300, "r_west"), (301, "r_east")} <= set(got)
 
 
 def test_knn_geometry_linestring_queries(spark):

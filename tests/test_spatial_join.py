@@ -20,7 +20,9 @@ def tables(spark):
     ).cache()
     imgs.count()
     polys.count()
-    return imgs, polys
+    yield imgs, polys
+    imgs.unpersist()
+    polys.unpersist()
 
 
 def assert_same_pairs(a, b):
